@@ -584,6 +584,83 @@ def sssp_bellman_ford(
     return dist
 
 
+def _min_key(cands: str, seed_col: str, t: int, reps: int | None = None) -> str:
+    """SQL for the smallest draw key over the array ``cands`` on step
+    ``t``; null for an empty array. Candidate x's key is
+    md5(walk:t:x) || '|' || lpad(x, 19), or with ``reps`` replicas one
+    key per replica i in 1..reps, md5(walk:t:x:i) || ... . The md5
+    part orders the candidates uniformly at random; the padded id makes
+    the order total and decodes the winner (substr from 34). Pad to 19
+    (max bigint digits): Spark's lpad TRUNCATES longer strings, so a
+    narrower pad would corrupt wide node ids. The SQL oracles build the
+    same string. Kept as one SQL string: building the lambdas through
+    the Column API costs hundreds of py4j round trips per step."""
+    rep = "" if reps is None else ", CAST(_r AS STRING)"
+    key = (
+        f"concat(md5(concat_ws(':', CAST(`{seed_col}` AS STRING), '{t}', "
+        f"CAST(_c AS STRING){rep})), '|', lpad(CAST(_c AS STRING), 19, '0'))"
+    )
+    if reps is None:
+        return f"array_min(transform({cands}, _c -> {key}))"
+    return (
+        f"array_min(flatten(transform({cands}, "
+        f"_c -> transform(sequence(1, {reps}), _r -> {key}))))"
+    )
+
+
+def _walk(edges: DataFrame, starts: DataFrame, steps: int, seed_col: str,
+          draw, second_order: bool = False) -> DataFrame:
+    """The step kernel both walk generators share.
+
+    ``edges`` is persisted once, as a node-sized adjacency list
+    (node, _nbrs = collect_list(dst)) behind a local checkpoint. Each
+    step broadcast-joins the walk-sized frontier (``_bcast_small``
+    ceiling; above it the join shuffles) to that list and takes the
+    next node from ``draw(t)``, the SQL of the winning draw key per row
+    over the row's ``_nbrs`` and, for a ``second_order`` walk, the
+    previous node ``_prev`` and its neighbour list ``_pn``.
+
+    Every frontier is a lazy local checkpoint: the next step's broadcast
+    job fills it (the caller's action fills the last one), so a step
+    costs one job and there is no early-stop count — a walk at a sink
+    drops out of the inner join, and an empty frontier stays empty. The
+    result is a union of ``steps + 1`` checkpoint leaves, so the plan
+    grows linearly in ``steps`` and no downstream job re-analyses the
+    walk lineage.
+    """
+    adj = (
+        edges.groupBy(F.col("src").cast("bigint").alias("node"))
+        .agg(F.collect_list(F.col("dst").cast("bigint")).alias("_nbrs"))
+        .localCheckpoint(eager=False)
+    )
+    carry = []
+    if second_order:
+        carry = [F.lit(None).cast("bigint").alias("_prev"),
+                 F.lit(None).cast("array<bigint>").alias("_pn")]
+    frontier = starts.select(
+        seed_col, F.lit(0).alias("step"),
+        F.col("node").cast("bigint").alias("node"), *carry,
+    ).localCheckpoint(eager=False)
+    n_walks = frontier.count()  # fills the checkpoint; one row per walk
+    out = frontier.select(seed_col, "step", "node")
+    for t in range(1, steps + 1):
+        if second_order:
+            carry = [F.col("node").alias("_prev"), F.col("_nbrs").alias("_pn")]
+        frontier = (
+            _bcast_small(frontier, n_walks)
+            .join(adj, "node")
+            .select(
+                seed_col,
+                F.lit(t).alias("step"),
+                F.expr(f"CAST(substr({draw(t)}, 34) AS BIGINT)").alias("node"),
+                *carry,
+            )
+            .localCheckpoint(eager=False)
+        )
+        out = out.unionByName(frontier.select(seed_col, "step", "node"))
+    return out
+
+
 def deterministic_walks(
     edges: DataFrame,
     starts: DataFrame,
@@ -600,70 +677,24 @@ def deterministic_walks(
     ``edges`` is (src, dst); ``starts`` is (walk_id, node) — one row
     per walk with its start node. Returns (walk_id, step, node) for
     steps 0..``steps`` (step 0 = the start). Walks stop early at sink
-    nodes (no out-edges).
+    nodes (no out-edges). Duplicate edges do not change the draw.
 
-    The argmin is computed with the string-key trick shared with the
-    SQL oracle: key = md5-hex || '|' || zero-padded dst, one min()
-    aggregate per (walk, step) — total order, no ties, identical
-    lexicographic comparison in both engines.
+    The argmin uses the string key shared with the SQL oracle
+    (:func:`_min_key`): md5-hex || '|' || zero-padded dst — a total
+    order with no ties, compared identically by both engines. Per step
+    it is one ``array_min`` over the current node's neighbour list.
 
-    At 100 TB: each step is one equi-join of the walk-frontier
-    (walk-count-sized, NOT graph-sized) against the edge list plus one
-    min aggregation — map-side combinable, state bounded by the number
-    of walks, steps independent of corpus size. This is the corpus
-    generator feeding skip-gram node-embedding training.
+    At 100 TB: the adjacency list is node-sized and built with one
+    shuffle of the edge list; each step broadcasts the walk-count-sized
+    frontier into a join with that list (no shuffle) and checkpoints
+    the new frontier (:func:`_walk`), so the plan grows linearly in
+    ``steps`` and the per-step work is O(deg(node)) per walk. This is
+    the corpus generator feeding skip-gram node-embedding training.
     """
-    from meerpipe_spark.cacheutil import persist_tracked
-
-    frontier = starts.select(
-        seed_col, F.lit(0).alias("step"), "node"
-    ).localCheckpoint()
-    n_walks = frontier.count()  # frontier never grows: one row per walk
-    out = frontier
-    for t in range(1, steps + 1):
-        key = F.concat(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.col(seed_col).cast("string"),
-                    F.lit(t).cast("string"),
-                    F.col("dst").cast("string"),
-                )
-            ),
-            F.lit("|"),
-            # pad to 19 (max bigint digits): Spark's lpad TRUNCATES
-            # strings longer than the pad length, so a 12-pad would
-            # corrupt node ids above 10^12 when decoded by substr/CAST.
-            F.lpad(F.col("dst").cast("string"), 19, "0"),
-        )
-        # r14 job cut (guide §5 driver latency): the step is a LAZY
-        # persist — the cache is filled by whichever action touches it
-        # first (usually the next step's frontier broadcast), so both
-        # consumers (next step + the output union) share one execution
-        # without spending an eager checkpoint job per step. persist is
-        # also the safer storage class (a lost cached partition
-        # recomputes from lineage; a lost checkpoint block is an
-        # error), and the walk state is small, so the per-step plan
-        # nesting stays trivial at steps <= O(10). The early-stop test
-        # runs every OTHER step: an empty frontier joins to an empty
-        # frontier and unions no rows, so checking late is
-        # value-identical — it only delays the break by one cheap
-        # empty step while halving the per-step count jobs.
-        frontier = persist_tracked(
-            _bcast_small(frontier, n_walks)
-            .join(edges, frontier["node"] == edges["src"])
-            .groupBy(seed_col)
-            .agg(F.min(key).alias("k"))
-            .select(
-                seed_col,
-                F.lit(t).alias("step"),
-                F.expr("CAST(substr(k, 34) AS BIGINT)").alias("node"),
-            )
-        )
-        if t % 2 == 0 and frontier.count() == 0:
-            break
-        out = out.unionByName(frontier)
-    return out
+    return _walk(
+        edges, starts, steps, seed_col,
+        lambda t: _min_key("_nbrs", seed_col, t),
+    )
 
 
 def node2vec_walks(
@@ -688,118 +719,40 @@ def node2vec_walks(
     md5(walk:step:x:i), and the walk takes the candidate owning the
     minimum key. Each replica is equally likely to be the global
     minimum, so P(x) = count(x)/Σcount — the exact biased draw — and
-    both engines replay it with md5 + a tiny integer explode (no
+    both engines replay it with md5 + integer sequences only (no
     ln/pow whose last-ulp behavior differs across libms). Weights stay
     exact for p, q in {.25, .5, 1, 2, 4}-style rationals; step 1 has
     no predecessor and draws uniformly, as in the reference
     implementation.
 
-    ``edges`` must contain both directions for undirected semantics
-    (the adjacency probe prev–x is a directed lookup). Per step: one
-    equi-join frontier×edges, one LEFT adjacency probe (equi on
-    (prev, dst) — edge-list-sized build), one explode by a ≤4·max(1/p,
-    1, 1/q)-row integer sequence, one min() per walk (map-side
-    combinable). Frontier state is walk-count-sized; lineage
-    checkpointed per step. Returns (walk_id, step, node).
-
-    The explode IS the fast draw on this engine (r12 A/B'd, negative
-    result kept for the record): an eager max_w-wide array_min+slice
-    hashed max_w=16 md5s for every 4-replica adjacent candidate
-    (1.8× slower); a lazily-CASE-selected fixed-width array variant
-    hashed the same md5 count as the explode but its ~28 md5 exprs
-    in one CaseWhen overflowed whole-stage codegen into interpreted
-    evaluation (1.4× slower). Row multiplication before a map-side-
-    combined partial min is cheaper than either.
+    ``edges`` must contain both directions for undirected semantics:
+    "x adjacent to t" means the directed edge t→x exists. Runs on the
+    step kernel shared with :func:`deterministic_walks` (:func:`_walk`);
+    the frontier also carries the previous node and its neighbour list,
+    so the three classes come from hash-based set operations on two
+    neighbour lists — return = {t} ∩ N(v), adjacent = N(v) ∩ N(t) −
+    {t}, far = N(v) − N(t) − {t} — O(deg(v) + deg(t)) per walk and
+    step, never a per-candidate probe of the edge list. Returns
+    (walk_id, step, node).
     """
     w_ret = max(1, round(replication / p))
     w_adj = replication
     w_far = max(1, round(replication / q))
-    # r14 (VERDICT r13 item 6): the per-step adjacency probe rebuilt
-    # the (prev, dst) exchange of the EDGE-sized side every step.
-    # Persist the probe table hash-laid-out by its join key once (the
-    # ppmi matrix trick: InMemoryTableScan preserves partitioning,
-    # localCheckpoint would discard it), so every step's left join
-    # exchanges only the walk-sized candidate stream — the edge side
-    # is shuffled exactly once, at build. Value-neutral: partitioning
-    # never changes a left equi-join's rows.
-    from meerpipe_spark.cacheutil import persist_tracked
 
-    adj = persist_tracked(
-        edges.select(
-            F.col("src").alias("_pa"),
-            F.col("dst").alias("_pb"),
-            F.lit(1).alias("_isadj"),
-        ).repartition("_pa", "_pb"),
-        level=_SER,
-    )
-    frontier = starts.select(
-        seed_col,
-        F.lit(0).alias("step"),
-        "node",
-        F.lit(None).cast("bigint").alias("_prev"),
-    ).localCheckpoint()
-    n_walks = frontier.count()  # frontier never grows: one row per walk
-    out = frontier.select(seed_col, "step", "node")
-    for t in range(1, steps + 1):
-        # the adjacency probe deliberately stays a (co-partitioned)
-        # shuffle join: its build side is EDGE-sized, and a broadcast
-        # hash relation of the whole edge list would be rebuilt and
-        # re-shipped every step (r13 A/B: 1.4x slower with the hint at
-        # sf0.1); since r14 the edge side arrives pre-partitioned from
-        # the persisted probe table, so only the candidate stream
-        # exchanges per step
-        cands = (
-            _bcast_small(frontier, n_walks)
-            .join(edges, frontier["node"] == edges["src"])
-            .join(
-                adj,
-                (F.col("_pa") == F.col("_prev")) & (F.col("_pb") == F.col("dst")),
-                "left",
-            )
+    def draw(t):
+        if t == 1:  # no predecessor yet: uniform over the neighbours
+            return _min_key("_nbrs", seed_col, t, w_adj)
+        classes = (
+            ("filter(_nbrs, _c -> _c = _prev)", w_ret),
+            ("array_except(array_intersect(_nbrs, _pn), array(_prev))", w_adj),
+            ("array_except(_nbrs, array_union(_pn, array(_prev)))", w_far),
         )
-        w = (
-            F.when(F.col("_prev").isNull(), F.lit(w_adj))  # first hop: uniform
-            .when(F.col("dst") == F.col("_prev"), F.lit(w_ret))
-            .when(F.col("_isadj") == 1, F.lit(w_adj))
-            .otherwise(F.lit(w_far))
+        # least() skips the null min of an empty class
+        return "least({})".format(
+            ", ".join(_min_key(c, seed_col, t, w) for c, w in classes)
         )
-        rep = cands.select(
-            seed_col,
-            "node",
-            "dst",
-            F.explode(F.sequence(F.lit(1), w)).alias("_rep"),
-        )
-        key = F.concat(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.col(seed_col).cast("string"),
-                    F.lit(t).cast("string"),
-                    F.col("dst").cast("string"),
-                    F.col("_rep").cast("string"),
-                )
-            ),
-            F.lit("|"),
-            F.lpad(F.col("dst").cast("string"), 19, "0"),
-        )
-        # r14 job cut: lazy persist + every-other-step early-stop test
-        # (see deterministic_walks for the full rationale — empty
-        # frontiers propagate empty, so the late check is
-        # value-identical)
-        frontier = persist_tracked(
-            rep.groupBy(seed_col)
-            .agg(F.min(key).alias("k"), F.max("node").alias("_prev"))
-            .select(
-                seed_col,
-                F.lit(t).alias("step"),
-                F.expr("CAST(substr(k, 34) AS BIGINT)").alias("node"),
-                "_prev",
-            )
-        )
-        if t % 2 == 0 and frontier.count() == 0:
-            break
-        out = out.unionByName(frontier.select(seed_col, "step", "node"))
-    return out
+
+    return _walk(edges, starts, steps, seed_col, draw, second_order=True)
 
 
 def skipgram_pairs(

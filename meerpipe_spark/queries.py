@@ -15765,7 +15765,9 @@ def _skipgram_oracle_sql(steps: int, window: int) -> str:
     _skipgram_oracle_sql(steps=8, window=2),
     doc="Skip-gram (center, context) training pairs from the "
         "deterministic walk corpus (operators/graph.py::skipgram_pairs "
-        "over deterministic_walks) — the bridge between walk generation "
+        "over deterministic_walks, whose steps broadcast the walk "
+        "frontier into the persisted adjacency list — no shuffle per "
+        "step) — the bridge between walk generation "
         "and embedding training (word2vec over node sequences): one "
         "self-equi-join on walk_id with the |Δstep| ≤ window band "
         "(bounded ≤2·window fan-out per position, never a cross join) "
@@ -15788,11 +15790,8 @@ def skipgram_pairs_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    edges = (
-        co.unionByName(
-            co.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint(True, _CKPT_SER)
+    edges = co.unionByName(
+        co.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     starts = part.filter(F.col("p_partkey") % 25 == 0).select(
         F.col("p_partkey").alias("walk_id"), F.col("p_partkey").alias("node")
@@ -15811,11 +15810,15 @@ def skipgram_pairs_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per candidate class), replica keys md5(walk:step:dst:i), walk "
         "takes the min key — an exact weighted draw both engines replay "
         "with integers + md5 only (no ln/pow libm divergence). The "
-        "adjacency probe prev-dst is one LEFT equi-join; the oracle "
-        "unrolls 6 steps as CTEs with identical expressions. 80 walks; "
-        "per step one frontier-sized equi-join + one min agg — the "
-        "structure-aware embedding-corpus generator next to DeepWalk's "
-        "uniform lane (random_walks_deterministic).",
+        "frontier carries the previous node's neighbour list, so the "
+        "three classes are hash set operations on two neighbour lists "
+        "(O(deg(v) + deg(prev)) per walk); the oracle unrolls 6 steps "
+        "as CTEs with identical expressions. 80 walks; per step one "
+        "broadcast join of the walk frontier into the persisted "
+        "adjacency list (no shuffle) + one per-row array_min + one "
+        "frontier checkpoint — the structure-aware embedding-corpus "
+        "generator next to DeepWalk's uniform lane "
+        "(random_walks_deterministic).",
     headline=True,
 )
 def node2vec_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -15832,11 +15835,8 @@ def node2vec_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    edges = (
-        co.unionByName(
-            co.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint(True, _CKPT_SER)
+    edges = co.unionByName(
+        co.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     starts = part.filter(F.col("p_partkey") % 25 == 0).select(
         F.col("p_partkey").alias("walk_id"), F.col("p_partkey").alias("node")
@@ -15854,10 +15854,13 @@ def node2vec_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "— a replayable uniform choice, so the walk corpus itself is "
         "oracle-hash-checked (both engines compare the same "
         "md5-hex||'|'||lpad(dst) string key; no RNG state, no ties, "
-        "no driver loop). 80 walks x 8 steps; each step is one "
-        "equi-join of the walk-count-sized frontier against the edge "
-        "list + one min aggregation. The corpus generator feeding "
-        "skip-gram node-embedding training at graph scale.",
+        "no driver loop). 80 walks x 8 steps; the edges are persisted "
+        "once as a node-sized adjacency list, and each step broadcasts "
+        "the walk-count-sized frontier into it (no shuffle), takes a "
+        "per-row array_min over the neighbour keys and checkpoints the "
+        "new frontier, so the plan grows linearly in steps. The corpus "
+        "generator feeding skip-gram node-embedding training at graph "
+        "scale.",
 )
 def random_walks_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meerpipe_spark.operators.graph import deterministic_walks
@@ -15873,11 +15876,8 @@ def random_walks_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    edges = (
-        co.unionByName(
-            co.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint(True, _CKPT_SER)
+    edges = co.unionByName(
+        co.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     starts = part.filter(F.col("p_partkey") % 25 == 0).select(
         F.col("p_partkey").alias("walk_id"), F.col("p_partkey").alias("node")
@@ -16018,7 +16018,9 @@ def _ppmi_svd_oracle_sql(
         "negative-sampling implicitly factorizes PMI − ln k), then "
         "top-3 cosine neighbors for every walk-start node — the lane "
         "that CLOSES the graph-embedding loop (VERDICT r9 item 3): "
-        "walks → skipgram_pairs → operators/graph.py::"
+        "walks (deterministic_walks: a flat union of per-step "
+        "checkpoints, so the ~100 downstream jobs never re-analyse "
+        "the walk lineage) → skipgram_pairs → operators/graph.py::"
         "ppmi_spectral_embeddings → neighbors. Iterative spectral "
         "math, yet fully oracle-hash-checked: PMI lands on the 1e9 "
         "integer grid (one libm ln on identical doubles), both power-"
@@ -16059,11 +16061,8 @@ def ppmi_svd_node_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    edges = (
-        co.unionByName(
-            co.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .localCheckpoint(True, _CKPT_SER)
+    edges = co.unionByName(
+        co.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     starts = part.filter(F.col("p_partkey") % 25 == 0).select(
         F.col("p_partkey").alias("walk_id"), F.col("p_partkey").alias("node")

@@ -63,8 +63,28 @@ _SLOW_TESTS = {
 }
 
 
+def _stale_slow_tests(items) -> set[str]:
+    """``_SLOW_TESTS`` entries that name no collected test. Checked only
+    when the run collected every test module of this directory: a run of
+    one file or one node id sees only part of the suite."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    modules = {
+        os.path.join(here, f)
+        for f in os.listdir(here)
+        if f.startswith("test_") and f.endswith(".py")
+    }
+    if not modules <= {str(it.path) for it in items}:
+        return set()
+    return _SLOW_TESTS - {it.originalname for it in items}
+
+
+@pytest.hookimpl(tryfirst=True)
 def pytest_collection_modifyitems(config, items):
     """Deselect slow tests unless SPARK_GRAFT_SLOW_TESTS=1.
+
+    Runs before any -k/-m deselection, and fails the session when a
+    ``_SLOW_TESTS`` entry matches no collected test: a renamed or
+    misspelt entry would otherwise silently stop deselecting.
 
     The full suite runs ~45 min on this box and the driver's pytest
     window truncated at ~66% in r13 (dots only, zero failures —
@@ -73,6 +93,11 @@ def pytest_collection_modifyitems(config, items):
     the default run keeps every fast invariant, every oracle
     comparison, and every ceiling-0 equality test.
     """
+    stale = _stale_slow_tests(items)
+    if stale:
+        raise pytest.UsageError(
+            f"tests/conftest.py _SLOW_TESTS names no collected test: {sorted(stale)}"
+        )
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1":
         return
     selected, deselected = [], []

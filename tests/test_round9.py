@@ -271,65 +271,181 @@ def test_plan_audit_annotates_checkpoint_truncation(spark):
     assert pa.CKPT_CALLS["n"] == 1
 
 
-def test_node2vec_walks_match_bruteforce_replay(spark):
-    """node2vec biased walks: the Spark plan must reproduce EXACTLY the
-    semantics a sequential replay of the replication-argmin draw gives
-    — same md5 keys, same weights, same tie-break."""
+#: Walk-replay graph: an undirected core whose nodes share neighbours
+#: (1-2-3-4 with chord 1-3), a duplicated edge, one-way edges (6→7,
+#: 7→5, 7→3) whose reverse is absent, a sink (8, reached only by 7→8)
+#: and an isolated start node (99, no edges at all).
+_WALK_UND = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (4, 5), (5, 6)]
+_WALK_EDGES = (
+    _WALK_UND
+    + [(b, a) for a, b in _WALK_UND]
+    + [(1, 2), (3, 4)]
+    + [(6, 7), (7, 5), (7, 3), (7, 8)]
+)
+_WALK_STARTS = [(100, 1), (200, 4), (300, 6), (400, 99), (500, 7),
+                (600, 5), (700, 2), (800, 3), (900, 8)]
+
+
+def _replay_walks(edges, starts, steps, weights=None):
+    """Sequential reference replay of the md5 argmin walk draw.
+
+    ``weights`` = (w_ret, w_adj, w_far) replays node2vec's replica
+    keys md5(walk:t:x:i); None replays the uniform draw md5(walk:t:x).
+    Returns ({walk_id: {step: node}}, {class: candidates seen})."""
     import hashlib
 
-    from meerpipe_spark.operators.graph import node2vec_walks
-
-    und = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3), (4, 5), (5, 6)]
-    both = und + [(b, a) for a, b in und]
-    edges = spark.createDataFrame(both, "src BIGINT, dst BIGINT")
-    starts = spark.createDataFrame(
-        [(100, 1), (200, 4), (300, 6)], "walk_id BIGINT, node BIGINT"
-    )
-    p_, q_, steps, repl = 4.0, 0.25, 6, 4
-    got = {}
-    for r in node2vec_walks(edges, starts, steps=steps, p=p_, q=q_,
-                            replication=repl).collect():
-        got.setdefault(r["walk_id"], {})[r["step"]] = r["node"]
-
-    # sequential reference replay
-    w_ret, w_adj, w_far = max(1, round(repl / p_)), repl, max(1, round(repl / q_))
-    outs, adjset = {}, set(both)
-    for a, b in both:
+    outs, adjset, seen, paths = {}, set(edges), {}, {}
+    for a, b in edges:
         outs.setdefault(a, []).append(b)
-
-    def md5hex(s):
-        return hashlib.md5(s.encode()).hexdigest()
-
-    for wid, start in ((100, 1), (200, 4), (300, 6)):
-        node, prev = start, None
-        expect = {0: start}
+    for wid, start in starts:
+        node, prev, path = start, None, {0: start}
         for t in range(1, steps + 1):
             best = None
             for dst in outs.get(node, []):
-                if prev is None:
-                    w = w_adj
-                elif dst == prev:
-                    w = w_ret
-                elif (prev, dst) in adjset:
-                    w = w_adj
+                if weights is None:
+                    reps = [f"{wid}:{t}:{dst}"]
                 else:
-                    w = w_far
-                for i in range(1, w + 1):
-                    k = md5hex(f"{wid}:{t}:{dst}:{i}") + "|" + str(dst).zfill(19)
+                    w_ret, w_adj, w_far = weights
+                    if prev is None:
+                        cls, w = "first", w_adj
+                    elif dst == prev:
+                        cls, w = "return", w_ret
+                    elif (prev, dst) in adjset:
+                        cls, w = "adjacent", w_adj
+                    else:
+                        cls, w = "far", w_far
+                    seen[cls] = seen.get(cls, 0) + 1
+                    reps = [f"{wid}:{t}:{dst}:{i}" for i in range(1, w + 1)]
+                for r in reps:
+                    k = hashlib.md5(r.encode()).hexdigest() + "|" + str(dst).zfill(19)
                     if best is None or k < best[0]:
                         best = (k, dst)
+            if best is None:  # sink: the walk ends here
+                break
             prev, node = node, best[1]
-            expect[t] = node
-        assert got[wid] == expect, f"walk {wid}"
+            path[t] = node
+        paths[wid] = path
+    return paths, seen
+
+
+def _walk_paths(df):
+    got = {}
+    for r in df.collect():
+        got.setdefault(r["walk_id"], {})[r["step"]] = r["node"]
+    return got
+
+
+def test_node2vec_walks_match_bruteforce_replay(spark, monkeypatch):
+    """node2vec biased walks: the Spark plan must reproduce EXACTLY the
+    semantics a sequential replay of the replication-argmin draw gives
+    — same md5 keys, same weights, same tie-break — on duplicate and
+    one-way edges, sinks, an isolated start and overlapping neighbour
+    lists, with INT node ids, on the broadcast and the shuffle-join
+    (ceiling 0) path."""
+    import meerpipe_spark.operators.graph as G
+
+    edges = spark.createDataFrame(_WALK_EDGES, "src INT, dst INT")
+    starts = spark.createDataFrame(_WALK_STARTS, "walk_id INT, node INT")
+    p_, q_, steps, repl = 4.0, 0.25, 6, 4
+    weights = (max(1, round(repl / p_)), repl, max(1, round(repl / q_)))
+    expect, seen = _replay_walks(_WALK_EDGES, _WALK_STARTS, steps, weights)
+    for ceiling in (G._BCAST_STATE_MAX_ROWS, 0):
+        monkeypatch.setattr(G, "_BCAST_STATE_MAX_ROWS", ceiling)
+        got = _walk_paths(G.node2vec_walks(
+            edges, starts, steps=steps, p=p_, q=q_, replication=repl
+        ))
+        assert got == expect, f"ceiling {ceiling}"
+    # the graph exercises every class, the isolated start and a sink
+    assert all(seen.get(c, 0) > 0 for c in ("first", "return", "adjacent", "far"))
+    assert expect[400] == {0: 99} and expect[900] == {0: 8}
+    assert any(0 < max(path) < steps for path in expect.values())
     # p=4, q=0.25 (explorer): with one low-weight replica against four
     # far replicas, immediate backtracks should be rare — sanity only
     backtracks = sum(
         1
-        for wid, path in got.items()
-        for t in range(2, max(path) + 1)
-        if path[t] == path[t - 2]
+        for wid in (100, 200, 300)
+        for t in range(2, max(got[wid]) + 1)
+        if got[wid][t] == got[wid][t - 2]
     )
     assert backtracks <= 6
+
+
+def test_deterministic_walks_match_bruteforce_replay(spark, monkeypatch):
+    """deterministic_walks reproduces the sequential md5(walk:t:x)
+    argmin replay exactly on the same edge cases as the node2vec
+    replay, on both join paths."""
+    import meerpipe_spark.operators.graph as G
+
+    edges = spark.createDataFrame(_WALK_EDGES, "src INT, dst INT")
+    starts = spark.createDataFrame(_WALK_STARTS, "walk_id INT, node INT")
+    expect, _ = _replay_walks(_WALK_EDGES, _WALK_STARTS, 6)
+    for ceiling in (G._BCAST_STATE_MAX_ROWS, 0):
+        monkeypatch.setattr(G, "_BCAST_STATE_MAX_ROWS", ceiling)
+        got = _walk_paths(G.deterministic_walks(edges, starts, steps=6))
+        assert got == expect, f"ceiling {ceiling}"
+    assert expect[400] == {0: 99} and expect[900] == {0: 8}
+
+
+def _plan_nodes(df) -> int:
+    """Logical-plan node count, walked on the JVM side (rendering a deep
+    plan to a string is itself what exhausts the driver heap)."""
+    stack, n = [df._jdf.queryExecution().logical()], 0
+    while stack:
+        node = stack.pop()
+        n += 1
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return n
+
+
+@pytest.mark.parametrize("walker", ["deterministic_walks", "node2vec_walks"])
+def test_walk_plan_grows_linearly_in_steps(spark, walker):
+    """Doubling ``steps`` at most doubles the walk's logical plan: each
+    step adds a constant number of nodes, never a copy of the earlier
+    steps' lineage."""
+    import meerpipe_spark.operators.graph as G
+
+    edges = spark.createDataFrame(_WALK_EDGES, "src INT, dst INT")
+    starts = spark.createDataFrame(_WALK_STARTS[:3], "walk_id INT, node INT")
+    walk = getattr(G, walker)
+    n4 = _plan_nodes(walk(edges, starts, steps=4))
+    n8 = _plan_nodes(walk(edges, starts, steps=8))
+    assert n8 <= 2 * n4, (n4, n8)
+
+
+def test_walks_32_steps_build_under_2g_driver_heap():
+    """A fresh driver with a 2g heap builds and runs both walk
+    generators at steps=32 on a tiny graph (a plan that grows with the
+    earlier steps' lineage runs it out of heap by steps=16)."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent("""
+        from meerpipe_spark.operators.graph import deterministic_walks, node2vec_walks
+        from meerpipe_spark.session import get_spark
+
+        spark = get_spark("walk-heap", master="local[2]", shuffle_partitions=2)
+        heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+        assert heap <= 2 * 1024 ** 3, heap
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (3, 1)], "src BIGINT, dst BIGINT"
+        )
+        starts = spark.createDataFrame([(10, 1), (20, 3)], "walk_id BIGINT, node BIGINT")
+        for walk in (deterministic_walks, node2vec_walks):
+            assert walk(edges, starts, steps=32).count() == 2 * 33, walk.__name__
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    env["SPARK_DRIVER_MEM"] = "2g"
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, (repo, env.get("PYTHONPATH"))))
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
 
 
 def test_weighted_pagerank_weights_steer_rank(spark):
